@@ -27,26 +27,26 @@ final class Dataset(val spark: SparkSession, val chain: MetadataChain) {
 
   def vocabulary: DatasetVocabulary = chain.vocabulary()
 
-  /** The dataset as a DataFrame, optionally pinned to a block hash. Empty
-    * chain → empty DataFrame with the declared schema (or empty schema). */
-  def toDF(asOf: Option[String] = None): DataFrame = {
-    val slices = chain.slices(asOf)
-    val ddl = chain.schemaDdl(asOf)
-    if (slices.isEmpty) {
-      val schema = ddl.map(StructType.fromDDL).getOrElse(new StructType())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val reader = ddl.map(d => spark.read.schema(StructType.fromDDL(d))).getOrElse(spark.read)
-      reader.parquet(chain.slicePaths(slices): _*)
-    }
+  /** The one schema-first slice reader: the given slices under the DDL as of
+    * `asOf` (inference only when no schema is declared yet). No slices →
+    * an empty DataFrame with that schema (or the empty schema). */
+  private def read(slices: Seq[AddData], asOf: Option[String]): DataFrame = {
+    val schema = chain.schemaDdl(asOf).map(StructType.fromDDL)
+    if (slices.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.getOrElse(new StructType()))
+    else schema.fold(spark.read)(spark.read.schema).parquet(chain.slicePaths(slices): _*)
   }
+
+  /** The dataset as a DataFrame, optionally pinned to a block hash. */
+  def toDF(asOf: Option[String] = None): DataFrame = read(chain.slices(asOf), asOf)
 
   /** The changelog rows with offset > `prevOffset` (everything when None) —
     * the (prev, head] read every incremental consumer performs, with
     * chain-level FILE pruning first: only slices overlapping the interval
     * are handed to the parquet reader, so a consumer that is nearly caught
-    * up reads O(new data), not O(history). (Same mechanism as transform
-    * input slicing; exposed for rollup/index maintenance.) */
+    * up reads O(new data), not O(history). Transform inputs, replay and
+    * rollup/index maintenance all read through here. */
   def changesSince(prevOffset: Option[Long], upTo: Option[Long] = None): DataFrame = {
     val lo = prevOffset.map(_ + 1).getOrElse(0L)
     // `upTo` bounds the read at a head observed BEFORE the (lazy) delta
@@ -56,14 +56,10 @@ final class Dataset(val spark: SparkSession, val chain: MetadataChain) {
     // concurrent writer).
     val slices = chain.slices()
       .filter(s => s.offsetEnd >= lo && upTo.forall(s.offsetStart <= _))
-    if (slices.isEmpty) toDF().limit(0)
+    if (slices.isEmpty) read(Nil, None)
     else {
-      val ddl = chain.schemaDdl()
-      val reader = ddl.map(d => spark.read.schema(StructType.fromDDL(d))).getOrElse(spark.read)
       val off = org.apache.spark.sql.functions.col(vocabulary.offsetColumn)
-      val base = reader
-        .parquet(chain.slicePaths(slices): _*)
-        .filter(off >= lo)
+      val base = read(slices, None).filter(off >= lo)
       upTo.fold(base)(hi => base.filter(off <= hi))
     }
   }
@@ -73,11 +69,7 @@ final class Dataset(val spark: SparkSession, val chain: MetadataChain) {
   def tail(n: Int, asOf: Option[String] = None): DataFrame = {
     val slices = chain.slicesForLastRecords(n.toLong, asOf)
     if (slices.isEmpty) toDF(asOf)
-    else {
-      val ddl = chain.schemaDdl(asOf)
-      val reader = ddl.map(d => spark.read.schema(StructType.fromDDL(d))).getOrElse(spark.read)
-      Changelog.tail(reader.parquet(chain.slicePaths(slices): _*), n, vocabulary)
-    }
+    else Changelog.tail(read(slices, asOf), n, vocabulary)
   }
 
   /** Changelog→state projection using the PK recorded in the chain

@@ -1,32 +1,30 @@
 package graft.ingest
 
-import java.nio.file.{Files, Path}
-import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.chain.MetadataChain
 import graft.dataset.Dataset
-import graft.model.{MergeConf, MetadataEvent}
-import graft.model.MetadataEvent.{AddData, SetDataSchema}
+import graft.model.MergeConf
+import graft.model.MetadataEvent.AddData
 import graft.operators.{MergeStrategy, Writer}
 
 /**
- * The ingest commit path: merge → stamp → offsets → normalize → single-file
- * parquet slice → stats → hashes → AddData block. Mirrors
- * `DataWriterDataFusion::{stage,write}`
+ * The ingest commit path: merge the batch against the prior state, then the
+ * shared slice pipeline of [[graft.operators.Writer]] (prepareSlice →
+ * commitSlice) and one AddData block. Mirrors `DataWriterDataFusion::{stage,write}`
  * (src/infra/ingest-datafusion/src/writer.rs:937-1135, 552-712).
  *
  * Scale notes: the merge and offset assignment are fully distributed (see
- * Writer.assignOffsets); only the final single-file slice write funnels
- * through one task — intentional, because ODF slices are bounded at
- * ≤300k records / ≤1 GiB (compaction_planner_impl.rs:221-229), so "one file
- * per slice" is a bounded cost, not a scale bottleneck.
+ * Writer.assignOffsets — the pipeline's one departure from the reference);
+ * only the final single-file slice write funnels through one task —
+ * intentional, because ODF slices are bounded at ≤300k records / ≤1 GiB
+ * (compaction_planner_impl.rs:221-229), so "one file per slice" is a bounded
+ * cost, not a scale bottleneck.
  */
 object IngestWriter {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Resolve a stored merge configuration to a strategy. */
   def strategyFor(conf: MergeConf, vocab: graft.model.DatasetVocabulary): MergeStrategy =
@@ -78,73 +76,24 @@ object IngestWriter {
         val prev = if (prevOffset.isDefined) Some(ds.toDF()) else None
         merge.merge(prev, batch)
     }
-    val stamped = Writer.stampSystemColumns(
-      merged,
-      new Timestamp(systemTime),
-      eventTimeFallback.map(new Timestamp(_)),
-      vocab
-    )
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      merge.sortOrder(stamped),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
-
-    val slicePath = writeSliceFile(chain, withOffsets)
-    slicePath match {
-      case None => None // empty merge -> nothing to commit
-      case Some((file, physicalHash)) =>
-        // Stats + logical hash in one pass over a re-read of the written
-        // file, so they are guaranteed to describe the slice as persisted
-        // (writer.rs:613-712).
-        val written = ds.spark.read.parquet(file.toString)
-        val (stats, logical) = Writer.computeStatsAndHash(
-          written,
-          chain.watermark().map(new Timestamp(_)),
-          vocab
-        ).get
-
-        // First write declares the schema; a later batch whose written schema
-        // differs (e.g. a new column) appends a fresh SetDataSchema — the
-        // reference's schema-migration-across-slices behavior
-        // (test_query_service_impl.rs:991). Schema-first reads then use the
-        // DDL as of the pinned block: old slices read under a newer DDL get
-        // nulls for the added columns, as-of reads see the old shape.
-        // Only COMPATIBLE evolution commits: additive columns or integral/
-        // float/decimal widening. A batch that drops or retypes a column is
-        // rejected here, before anything lands in the chain — otherwise head
-        // reads would fail on old slices (parquet type conflict) or silently
-        // hide the dropped column.
-        val writtenDdl = written.schema.toDDL
-        if (!chain.schemaDdl().contains(writtenDdl)) {
-          chain.schemaDdl().foreach(prev => validateSchemaEvolution(prev, written.schema))
-          chain.append(SetDataSchema(writtenDdl), systemTime)
+    val prepared =
+      Writer.prepareSlice(merged, merge.sortOrder, prevOffset, systemTime, vocab, eventTimeFallback)
+    Writer.commitSlice(chain, prepared, prevOffset, systemTime, vocab).map { case (added, written) =>
+      val event = added.copy(sourceState = sourceState)
+      chain.append(event, systemTime)
+      // Roll the state cache forward incrementally: project(old state ∪ new
+      // slice) — O(state), never O(history). Best-effort: a failure here
+      // only means the next ingest rebuilds from the ledger, so it is
+      // logged, not thrown.
+      statePk.foreach { pk =>
+        try updateStateCache(ds, pk, priorState, written)
+        catch {
+          case NonFatal(e) =>
+            log.warn(s"state cache roll-forward failed for dataset ${ds.name}; " +
+              "the next ingest rebuilds its prior state from the ledger", e)
         }
-
-        val event = AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime),
-          sourceState = sourceState,
-          logicalHashSha3 =
-            if (graft.operators.RecordDigest.enabled(ds.spark))
-              Some(graft.operators.RecordDigest.digest(written.orderBy(vocab.offsetColumn)))
-            else None
-        )
-        chain.append(event, systemTime)
-        // Roll the state cache forward incrementally: project(old state ∪ new
-        // slice) — O(state), never O(history). Best-effort: a failure here
-        // only means the next ingest rebuilds from the ledger.
-        statePk.foreach { pk =>
-          try updateStateCache(ds, pk, priorState, written)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        Some(event)
+      }
+      event
     }
   }
 
@@ -318,118 +267,5 @@ object IngestWriter {
       if (sv.length == 10) java.time.Instant.parse(sv + "T00:00:00Z")
       else java.time.Instant.parse(sv)
     inst.toEpochMilli
-  }
-
-  /** Can a column of parquet type `from` be read under declared type `to`?
-    * Identical always; otherwise the lossless widenings Spark's parquet
-    * readers support (SPARK-40876): integral up-casts, float→double,
-    * decimal precision growth that keeps all old values representable. */
-  private def widens(from: org.apache.spark.sql.types.DataType,
-                     to: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    (from, to) match {
-      case (a, b) if a == b                        => true
-      case (ByteType, ShortType | IntegerType | LongType) => true
-      case (ShortType, IntegerType | LongType)     => true
-      case (IntegerType, LongType)                 => true
-      case (FloatType, DoubleType)                 => true
-      case (a: DecimalType, b: DecimalType)        =>
-        b.scale >= a.scale && (b.precision - b.scale) >= (a.precision - a.scale)
-      case (ArrayType(a, _), ArrayType(b, _))      => widens(a, b)
-      case (StructType(af), StructType(bf))        =>
-        af.forall(f => bf.find(_.name == f.name).exists(g => widens(f.dataType, g.dataType)))
-      case _                                       => false
-    }
-  }
-
-  /** Reject incompatible schema changes at write time: every previously
-    * declared column must still exist with the same (or compatibly widened)
-    * type. New columns are fine — old slices read under the new DDL yield
-    * nulls for them. */
-  private[graft] def validateSchemaEvolution(
-      prevDdl: String,
-      written: org.apache.spark.sql.types.StructType
-  ): Unit = {
-    val prev = org.apache.spark.sql.types.StructType.fromDDL(prevDdl)
-    val problems = prev.fields.flatMap { f =>
-      written.fields.find(_.name == f.name) match {
-        case None => Some(s"column '${f.name}' dropped")
-        case Some(g) if !widens(f.dataType, g.dataType) =>
-          Some(s"column '${f.name}' retyped ${f.dataType.simpleString} -> ${g.dataType.simpleString}")
-        case _ => None
-      }
-    }
-    if (problems.nonEmpty)
-      throw new IllegalArgumentException(
-        s"incompatible schema evolution rejected: ${problems.mkString("; ")} " +
-          s"(only additive columns or lossless type widening are allowed)")
-  }
-
-  /**
-   * Write a DataFrame as a single snappy parquet file under `data/<hash>`;
-   * returns the final path + physical hash, or None for an empty input.
-   * Physical hash = SHA-256 of the file bytes, streamed through the chain's
-   * Hadoop FileSystem — fine to compute driver-side because slices are
-   * size-bounded. Staging happens in a SIBLING `staging/` dir (same
-   * filesystem, so the final move is a rename — atomic on HDFS/posix, no
-   * cross-store copy) and NEVER inside `data/`: the data dir is also a
-   * Structured Streaming file source (StreamingOps.datasetStream), and a
-   * consumer listing it mid-write must only ever see final
-   * content-addressed files, not transient part files it would double-read.
-   */
-  private[graft] def writeSliceFile(
-      chain: MetadataChain,
-      df: DataFrame
-  ): Option[(org.apache.hadoop.fs.Path, String)] = {
-    val fs = chain.fs
-    val tmp = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(chain.root, "staging"),
-      s"tmp-${java.util.UUID.randomUUID()}")
-    df.coalesce(1)
-      .write
-      .mode("overwrite")
-      .option("compression", "snappy")
-      .parquet(tmp.toString)
-    val part = fs.listStatus(tmp)
-      .map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-    val result = part.flatMap { p =>
-      // A parquet file with zero rows still gets written (footer only, well
-      // under 1 KiB of payload); detect emptiness from the FILE SIZE instead
-      // of a count() scan — one fewer Spark job on every chain commit. The
-      // smallest 1-row snappy file observed is ~1.5 KiB; an empty single
-      // file is ~400-800 bytes of pure footer. The caller's stats pass
-      // (numRecords) is the authoritative check; this is the fast path for
-      // the common identical-snapshot no-op.
-      val isEmpty = fs.getFileStatus(p).getLen < 1024 &&
-        df.sparkSession.read.parquet(p.toString).isEmpty
-      if (isEmpty) None
-      else {
-        val hash = chain.sha256HexOf(p)
-        val target = chain.dataFile(hash)
-        if (!fs.exists(target)) fs.rename(p, target)
-        Some((target, hash))
-      }
-    }
-    // clean up the tmp dir (part file moved out or empty)
-    fs.delete(tmp, true)
-    result
-  }
-
-  /**
-   * Logical (content) hash: layout-independent digest of the slice rows.
-   * XOR-aggregate of per-row xxhash64 over all columns — order- and
-   * partitioning-independent (rows are unique by offset), distributed, no
-   * driver materialization. Internal-consistent stand-in for the reference's
-   * arrow-digest RecordDigestV0 (src/odf/data-utils/src/data/hash.rs:24-64):
-   * the property that matters — stable under re-encode/repartition/compaction
-   * — holds; cross-implementation interop hashes do not.
-   */
-  def logicalHash(df: DataFrame): String = {
-    val h = df
-      .select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
-      .agg(expr("bit_xor(h)").as("x"), count(lit(1)).as("n"))
-      .head()
-    f"${h.getAs[Long]("x")}%016x-${h.getAs[Long]("n")}%d"
   }
 }

@@ -1,18 +1,12 @@
 package graft.maintenance
 
-import java.nio.file.{Files, Path}
-import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
-import graft.ingest.IngestWriter
-import graft.model.{MetadataBlock, MetadataEvent}
+import graft.model.MetadataBlock
 import graft.model.MetadataEvent._
-import graft.operators.Writer
+import graft.operators.{MergeStrategy, Writer}
 
 /**
  * Maintenance operators: compaction, verification, transform replay.
@@ -92,7 +86,7 @@ object Maintenance {
       .parquet(stagingOut.toString)
 
     // Per-slice stats + logical hashes in ONE aggregation pass — the
-    // XOR-of-row-hashes construction of [[Writer.computeStatsAndHash]],
+    // XOR-of-row-hashes construction of [[Writer.logicalHash]],
     // grouped by slice id (the XOR aggregate distributes over grouping).
     // Hash input is the original column set in original order, exactly what
     // re-reading a staged file would yield (`_slice` lives in the directory
@@ -135,7 +129,7 @@ object Maintenance {
         .find(_.getName.startsWith("part-"))
         .get
       val st = sliceStats(i)
-      val logical = f"${st.getAs[Long]("x")}%016x-${st.getAs[Long]("n")}%d"
+      val logical = Writer.formatLogicalHash(st.getAs[Long]("x"), st.getAs[Long]("n"))
       val hash = chain.sha256HexOf(file)
       val target = chain.dataFile(hash)
       if (!fs.exists(target)) fs.rename(file, target)
@@ -307,18 +301,24 @@ object Maintenance {
       if (actual != declared)
         issues += ChainIssue(s"block $name: content hash $actual != filename hash $declared")
     }
-    val blocks = chain.blocks()
-    blocks.sliding(2).foreach {
-      case Seq(a, b) =>
-        val aHash = chain.hashAt(a.sequenceNumber)
-        if (b.prevBlockHash != aHash)
+    // prev links and sequence numbers, from one head-backwards walk (the
+    // walk follows the links, so a block can only be out of place by its
+    // sequence number)
+    chain.blocksWithHashes().sliding(2).foreach {
+      case Seq((a, aHash), (b, _)) =>
+        if (!b.prevBlockHash.contains(aHash))
           issues += ChainIssue(
-            s"block ${b.sequenceNumber}: prevBlockHash ${b.prevBlockHash} != ${aHash}"
+            s"block ${b.sequenceNumber}: prevBlockHash ${b.prevBlockHash} != ${Some(aHash)}"
+          )
+        if (b.sequenceNumber != a.sequenceNumber + 1)
+          issues += ChainIssue(
+            s"block ${b.sequenceNumber}: sequence number does not follow ${a.sequenceNumber}"
           )
       case _ => ()
     }
 
     // slice integrity
+    lazy val vocab = chain.vocabulary()
     var prevEnd: Option[Long] = None
     chain.slices().foreach { s =>
       val file = chain.dataFile(s.physicalHash)
@@ -332,18 +332,18 @@ object Maintenance {
           // may not even parse as parquet
           try {
             val df = ds.spark.read.parquet(file.toString)
-            val logical = IngestWriter.logicalHash(df)
+            val logical = Writer.logicalHash(df)
             if (logical != s.logicalHash)
               issues += SliceIssue(
                 s.physicalHash,
                 s"logical hash mismatch: $logical vs ${s.logicalHash}"
               )
-            if (df.count() != s.numRecords)
+            // the recomputed hash ends in the file's row count
+            if (Writer.logicalHashRecords(logical) != s.numRecords)
               issues += SliceIssue(s.physicalHash, "record count mismatch")
             // second logical hash (SHA3-256 record digest) — checked
             // whenever the commit recorded one
             s.logicalHashSha3.foreach { expected =>
-              val vocab = chain.vocabulary()
               val sha3 = graft.operators.RecordDigest.digest(df.orderBy(vocab.offsetColumn))
               if (sha3 != expected)
                 issues += SliceIssue(
@@ -365,8 +365,10 @@ object Maintenance {
 
   /**
    * Transform replay verification (transform_executor_impl.rs:226-366): for
-   * every ExecuteTransform block, re-run the declared SQL over the recorded
-   * input intervals and compare the logical hash of the output slice.
+   * every ExecuteTransform block, re-run the SQL declared at that point of
+   * the chain over the recorded input intervals, through the commit's own
+   * [[Writer.prepareSlice]], and compare the logical hash of the output
+   * slice.
    */
   def verifyTransform(ds: Dataset, resolve: String => Dataset): Seq[Issue] = {
     val spark = ds.spark
@@ -393,33 +395,23 @@ object Maintenance {
       return issues.result()
     }
 
+    // each run replays under the SetTransform in force when it executed
+    var steps = decl.steps
     chain.blocks().foreach {
+      case MetadataBlock(_, _, _, t: SetTransform) => steps = t.steps
       case MetadataBlock(_, _, systemTime, ExecuteTransform(inputs, Some(newData), _)) =>
         inputs.foreach { st =>
-          val in = resolve(st.datasetName)
-          val lo = st.prevOffset.map(_ + 1).getOrElse(0L)
-          val hi = st.newOffset.getOrElse(-1L)
-          in.toDF()
-            .filter(col(in.vocabulary.offsetColumn) >= lo && col(in.vocabulary.offsetColumn) <= hi)
+          // an input with no newOffset was empty when the run executed
+          resolve(st.datasetName)
+            .changesSince(st.prevOffset, Some(st.newOffset.getOrElse(-1L)))
             .createOrReplaceTempView(st.datasetName)
         }
-        val result = {
-          decl.steps.init.foreach { s =>
-            spark.sql(s.query).createOrReplaceTempView(s.alias.get)
-          }
-          spark.sql(decl.steps.last.query)
-        }
-        val withOp =
-          if (result.columns.contains(vocab.operationTypeColumn)) result
-          else result.withColumn(vocab.operationTypeColumn, lit(graft.model.Op.Append))
-        val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-        val replayed = Writer.assignOffsets(
-          Writer.normalizeTimestamps(stamped),
-          graft.operators.MergeStrategy.totalOrder(stamped, vocab),
-          startOffset = newData.offsetStart,
-          vocab
-        )
-        val hash = IngestWriter.logicalHash(replayed)
+        steps.init.foreach(s => spark.sql(s.query).createOrReplaceTempView(s.alias.get))
+        val result = spark.sql(steps.last.query)
+        // the commit's own pure half, so commit and replay cannot drift
+        val replayed = Writer.prepareSlice(
+          result, MergeStrategy.totalOrder(_, vocab), newData.prevOffset, systemTime, vocab)
+        val hash = Writer.logicalHash(replayed)
         if (hash != newData.logicalHash)
           issues += SliceIssue(
             newData.physicalHash,

@@ -102,7 +102,7 @@ final class QueryService(
     val bare = QueryProof(
       queryDigest = QueryProof.queryDigest(statement),
       inputs = state.inputs,
-      resultHash = graft.ingest.IngestWriter.logicalHash(df)
+      resultHash = graft.operators.Writer.logicalHash(df)
     )
     (df, nodeKey.map(bare.signed).getOrElse(bare))
   }
@@ -114,7 +114,7 @@ final class QueryService(
     if (QueryProof.queryDigest(statement) != proof.queryDigest) return false
     val (df, state) = sqlWithState(statement, asOf = proof.inputs)
     state.inputs == proof.inputs &&
-    graft.ingest.IngestWriter.logicalHash(df) == proof.resultHash
+    graft.operators.Writer.logicalHash(df) == proof.resultHash
   }
 
   /** Last-n service over a dataset (query_service_impl.rs:446-497). */

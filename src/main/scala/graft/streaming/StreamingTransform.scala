@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,10 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
-import graft.ingest.IngestWriter
-import graft.model.MetadataEvent.{CheckpointRef, ExecuteTransform, SetDataSchema, TransformInputState}
-import graft.model.Op
-import graft.operators.{MergeStrategy, Writer}
+import graft.model.MetadataEvent.{CheckpointRef, ExecuteTransform, TransformInputState}
+import graft.transform.TransformService
 
 /**
  * Continuous derivative transforms: a dataset consumed as a stream, a
@@ -78,36 +74,7 @@ object StreamingTransform {
       .flatMap(_.newOffset)
     if (prevHi.exists(_ >= hi)) return None // replayed batch -> skip
 
-    val withOp =
-      if (transformed.columns.contains(vocab.operationTypeColumn)) transformed
-      else transformed.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-    val prevOffset = output.chain.lastOffset()
-    val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      MergeStrategy.totalOrder(stamped, vocab),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
-
-    val newData = IngestWriter.writeSliceFile(output.chain, withOffsets).map {
-      case (file, physicalHash) =>
-        val written = output.spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        graft.model.MetadataEvent.AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime)
-        )
-    }
+    val newData = TransformService.commitOutput(output, transformed, systemTime)
     val ckpt = checkpointDir.flatMap(d => hashCheckpointDir(output.chain.fs, d))
     val event = ExecuteTransform(
       Seq(TransformInputState(inputName, prevHi, Some(hi))),
@@ -210,7 +177,6 @@ object StreamingTransform {
     q.awaitTermination()
 
     val systemTime = clock()
-    val vocab = output.vocabulary
     val staged =
       if (!fs.exists(stage)) Nil
       else fs.listStatus(stage).toSeq.map(_.getPath)
@@ -222,36 +188,7 @@ object StreamingTransform {
         if (df.isEmpty) None else Some(df)
     }
 
-    val prevOffset = output.chain.lastOffset()
-    val newData = emitted.flatMap { df =>
-      val withOp =
-        if (df.columns.contains(vocab.operationTypeColumn)) df
-        else df.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-      val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-      val withOffsets = Writer.assignOffsets(
-        Writer.normalizeTimestamps(stamped),
-        MergeStrategy.totalOrder(stamped, vocab),
-        startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-        vocab
-      )
-      IngestWriter.writeSliceFile(output.chain, withOffsets).map { case (file, physicalHash) =>
-        val written = spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        graft.model.MetadataEvent.AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime)
-        )
-      }
-    }
+    val newData = emitted.flatMap(TransformService.commitOutput(output, _, systemTime))
 
     val ckpt = hashCheckpointDir(fs, checkpoint)
     val event = ExecuteTransform(

@@ -1,13 +1,9 @@
 package graft.transform
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.dataset.Dataset
 import graft.ingest.IngestWriter
-import graft.model.{MetadataEvent, Op}
 import graft.model.MetadataEvent._
 import graft.operators.{MergeStrategy, Writer}
 
@@ -48,24 +44,6 @@ object TransformService {
       .flatMap(_.inputs.find(_.datasetName == inputName))
       .flatMap(_.newOffset)
     (prev, input.chain.lastOffset())
-  }
-
-  /** Scan only the slices of `input` that overlap (prev, new]. */
-  private def sliceDF(input: Dataset, prev: Option[Long], newOffset: Option[Long]): DataFrame = {
-    val vocab = input.vocabulary
-    val lo = prev.map(_ + 1).getOrElse(0L)
-    val hi = newOffset.getOrElse(-1L)
-    val slices = input.chain.slices().filter(s => s.offsetEnd >= lo && s.offsetStart <= hi)
-    if (slices.isEmpty) input.toDF().limit(0)
-    else {
-      val ddl = input.chain.schemaDdl()
-      val reader =
-        ddl.map(d => input.spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(d)))
-          .getOrElse(input.spark.read)
-      reader
-        .parquet(input.chain.slicePaths(slices): _*)
-        .filter(col(vocab.offsetColumn) >= lo && col(vocab.offsetColumn) <= hi)
-    }
   }
 
   /**
@@ -121,7 +99,7 @@ object TransformService {
     if (intervals.forall { case (_, _, prev, newOff) => prev == newOff }) return UpToDate
 
     intervals.foreach { case (name, in, prev, newOff) =>
-      sliceDF(in, prev, newOff).createOrReplaceTempView(name)
+      in.changesSince(prev, newOff).createOrReplaceTempView(name)
     }
     val result: DataFrame = decl.steps match {
       case Seq() => throw new IllegalStateException("SetTransform with no steps")
@@ -133,21 +111,6 @@ object TransformService {
         }
         spark.sql(steps.last.query)
     }
-
-    val vocab = output.vocabulary
-    // Batch-SQL engines emit appends unless the query carries op through.
-    val withOp =
-      if (result.columns.contains(vocab.operationTypeColumn)) result
-      else result.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-
-    val prevOffset = output.chain.lastOffset()
-    val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      MergeStrategy.totalOrder(stamped, vocab),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
 
     val inputStates = intervals.map { case (name, _, prev, newOff) =>
       TransformInputState(name, prev, newOff)
@@ -165,28 +128,26 @@ object TransformService {
       case (p, o)             => p.orElse(o)
     }
 
-    val newData = IngestWriter.writeSliceFile(output.chain, withOffsets).map {
-      case (file, physicalHash) =>
-        val written = spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = outWm
-        )
-    }
+    val newData = commitOutput(output, result, systemTime).map(_.copy(newWatermark = outWm))
 
     val event = ExecuteTransform(inputStates, newData)
     output.chain.append(event, systemTime)
     Updated(event)
+  }
+
+  /** Commit a transform's output rows as the next slice of `output` through
+    * the shared slice pipeline — batch, streaming and stateful transforms
+    * alike. The caller wraps the AddData in its ExecuteTransform. */
+  private[graft] def commitOutput(
+      output: Dataset,
+      rows: DataFrame,
+      systemTime: Long
+  ): Option[AddData] = {
+    val vocab = output.vocabulary
+    val prevOffset = output.chain.lastOffset()
+    val prepared =
+      Writer.prepareSlice(rows, MergeStrategy.totalOrder(_, vocab), prevOffset, systemTime, vocab)
+    Writer.commitSlice(output.chain, prepared, prevOffset, systemTime, vocab).map(_._1)
   }
 
   // ------------------------------------------------------------ pull plan

@@ -11,7 +11,7 @@ import graft.chain.MetadataChain
 import graft.ingest.{IngestWriter, Readers}
 import graft.model.{MergeConf, MetadataEvent}
 import graft.model.MetadataEvent._
-import graft.operators.MergeStrategy
+import graft.operators.{MergeStrategy, Writer}
 
 class DatasetSpec extends SparkSpec {
   import spark.implicits._
@@ -195,7 +195,7 @@ class DatasetSpec extends SparkSpec {
 
     // logical hash is stable across repartitioning
     val df = Dataset.open(spark, root).toDF()
-    assert(IngestWriter.logicalHash(df) === IngestWriter.logicalHash(df.repartition(7)))
+    assert(Writer.logicalHash(df) === Writer.logicalHash(df.repartition(7)))
   }
 
   test("readers: ndjson, single-doc json with subPath, preprocess sql") {

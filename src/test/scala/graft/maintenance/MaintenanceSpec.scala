@@ -146,6 +146,18 @@ class MaintenanceSpec extends SparkSpec {
     assert(issues.exists(_.msg.contains("physical hash mismatch")), issues.mkString("; "))
   }
 
+  test("verify: a slice whose recorded numRecords disagrees with its file is reported") {
+    val ds = mkDataset(slices = 1, rowsPerSlice = 3)
+    val s = ds.chain.slices().head
+    // a second slice over the same 3-row file that claims 4 records; its
+    // offsets are contiguous and its hashes true, so the count is the only lie
+    ds.chain.append(
+      s.copy(prevOffset = Some(s.offsetEnd), offsetStart = s.offsetEnd + 1,
+        offsetEnd = s.offsetEnd + 4, numRecords = 4L),
+      5000L)
+    assert(Maintenance.verify(ds) === Seq(Maintenance.SliceIssue(s.physicalHash, "record count mismatch")))
+  }
+
   test("verify: tampered block file is detected") {
     val ds = mkDataset(slices = 1, rowsPerSlice = 3)
     // the Seed block is the one containing the dataset name "m"

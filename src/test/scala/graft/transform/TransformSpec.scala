@@ -113,6 +113,47 @@ class TransformSpec extends SparkSpec {
     assert(out.map(_.getAs[String]("tag")).toSeq === Seq("r1a", "r1b", "r2a"))
   }
 
+  test("schema evolution of a derivative: an added column is declared, a retype is rejected") {
+    val work = Files.createTempDirectory("graft-evo-")
+    Dataset.create(spark, work.resolve("evoa"), "evoa")
+    def ingest(k: String, v: Long, sysTime: String): Unit =
+      IngestWriter.writeBatch(
+        Dataset.open(spark, work.resolve("evoa")),
+        Seq((ts("2024-01-01T00:00:00Z"), k, v)).toDF("event_time", "k", "v"),
+        MergeStrategy.Append(), ms(sysTime))
+    ingest("x", 1L, "2024-06-01T00:00:00Z")
+
+    val d = Dataset.create(spark, work.resolve("evod"), "evod", kind = "derivative")
+    TransformService.setTransform(d, Seq("evoa"), Seq(SqlStep(None, "SELECT event_time, k FROM evoa")), 0L)
+    val resolve = (n: String) => Dataset.open(spark, work.resolve(n))
+    TransformService.executeTransform(d, resolve, ms("2024-06-02T00:00:00Z"))
+
+    // replacement adds column v: the new slice carries it, and the schema
+    // declared for reads must too (old rows read it as null)
+    ingest("y", 2L, "2024-06-03T00:00:00Z")
+    TransformService.setTransform(
+      d, Seq("evoa"), Seq(SqlStep(None, "SELECT event_time, k, v FROM evoa")), ms("2024-06-03T00:00:00Z"))
+    TransformService.executeTransform(d, resolve, ms("2024-06-04T00:00:00Z"))
+    val out = resolve("evod").toDF().orderBy("offset")
+    assert(out.columns.contains("v"))
+    assert(out.select("k", "v").as[(String, Option[Long])].collect().toSeq ===
+      Seq(("x", None), ("y", Some(2L))))
+    // replay runs each slice under the transform it was committed with
+    assert(graft.maintenance.Maintenance.verifyTransform(resolve("evod"), resolve).isEmpty)
+
+    // replacement retypes v: rejected at commit, head unmoved
+    ingest("z", 3L, "2024-06-05T00:00:00Z")
+    TransformService.setTransform(
+      d, Seq("evoa"), Seq(SqlStep(None, "SELECT event_time, k, CAST(v AS STRING) AS v FROM evoa")),
+      ms("2024-06-05T00:00:00Z"))
+    val headBefore = resolve("evod").chain.head
+    val e = intercept[IllegalArgumentException](
+      TransformService.executeTransform(resolve("evod"), resolve, ms("2024-06-06T00:00:00Z")))
+    assert(e.getMessage.contains("column 'v' retyped"), e.getMessage)
+    assert(resolve("evod").chain.head === headBefore)
+    assert(resolve("evod").toDF().count() === 2)
+  }
+
   test("pullPlan: depth levels group independent datasets; cycles rejected") {
     val work = Files.createTempDirectory("graft-plan-pull-")
     def mk(name: String, inputs: Seq[String]): Dataset = {
